@@ -34,6 +34,7 @@ from .segments import (
     SegmentIndex,
     build_segments,
     compact,
+    count_unique_ids,
     delete_doc_ids,
     upsert_segments,
 )
@@ -714,6 +715,8 @@ class FuguSparkEngine:
         )
         good = FC.normalize_metadata(good)
         good = with_date_fields(good)
+        # a repeated id must fail before the counts ledger is touched
+        n_good = count_unique_ids(good, self.id_col)
         # A9 (/root/reference/src/server/handlers/ingest.rs:88-117): tally
         # objects arriving with explicit facets vs facet-less (generated)
         if self.facets_col in good.columns:
@@ -733,7 +736,7 @@ class FuguSparkEngine:
         else:
             self.last_ingest_tally = {
                 "explicit_facets_count": 0,
-                "generated_facets_count": good.count(),
+                "generated_facets_count": n_good,
             }
         # counts ledger: subtract the REPLACED docs' facet prefixes (their
         # old rows are about to be delete-masked), then add the batch's

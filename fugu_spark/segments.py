@@ -6,9 +6,10 @@ The dataflow (north_star made explicit):
   corpus ──build_postings──▶ postings_raw (parquet, bucketed by term)   [stage 1]
      │ df-sketch → salt map (hot-term skew split)
      ▼
-  groupBy(term, salt).applyInPandas(encode)  ←─ the salted repartition-
-     │   by-term shuffle; each (term, salt) group is doc-sorted and
-     │   delta+varint-encoded into 128-doc blocks with skip metadata
+  repartition(term, salt) → sortWithinPartitions(term, salt, doc_id)
+     │   → mapInArrow(encode): the salted shuffle; one Python call per
+     │   Arrow batch finds the (term, salt) runs and delta+varint-encodes
+     │   each run into 128-doc blocks with skip metadata
      ▼
   segments/ (parquet, partitionBy(term_bucket))                         [stage 2]
      ▼
@@ -22,7 +23,11 @@ byte-identically (corpus generation and encoding are deterministic).
 Skew: a term with df > hot_df_threshold is split into
 ceil(df/threshold) salted sub-lists (salt = xxhash64(doc_id) % n), so
 no single shuffle partition receives an unbounded posting list; the
-dictionary merge (stage 3) re-aggregates the sub-lists.
+dictionary merge (stage 3) re-aggregates the sub-lists. postings_raw
+is deleted once the segments stage commits.
+
+Document ids must be unique: build and upsert count them before writing
+anything and raise on a repeated id.
 
 Reference anchors: segment-per-commit layout /root/reference/src/db/
 core.rs:238-249; writer commit = publish point /root/reference/src/db/
@@ -37,9 +42,9 @@ import time
 import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
+from itertools import chain
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -166,33 +171,40 @@ def _append_manifest(spark: SparkSession, index_dir: str, rows: list[tuple]) -> 
 _TAG_VARINT = bytes([0])  # codecs.CODEC_VARINT
 
 
-def _encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: one (term, salt) posting sub-list →
-    delta-encoded 128-doc block rows with skip metadata; streams are
-    codec-tagged (byte 0): doc ids pick PFOR or varint per block, the
-    small-value streams (tf, doc_len, positions) stay varint.
+def _encode_run(
+    term: str,
+    salt: int,
+    bucket: int,
+    doc_i64: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    pos_b: bytes,
+    pos_doc_off: np.ndarray,
+) -> list:
+    """One doc-sorted (term, salt) posting sub-list → the SEGMENT_SCHEMA
+    columns of its 128-doc block rows (numerics as numpy arrays, streams
+    as lists of bytes). Streams are codec-tagged (byte 0): doc ids pick
+    PFOR or varint per block, the small-value streams (tf, doc_len,
+    positions) stay varint.
 
-    The varint side is encoded ONCE for the whole group (delta reset at
+    The varint side is encoded ONCE for the whole run (delta reset at
     block starts / doc starts), then sliced per block at value
     boundaries — bit-identical to per-block encoding with 4 numpy calls
-    per group instead of 4 per block. The doc-id PFOR-vs-varint choice
-    is likewise group-level (codecs.encode_doc_streams): one histogram +
-    matmul width search for all blocks, batched bitpacking — this is
-    what fixed the round-3 stage-2 encode regression."""
+    per run instead of 4 per block. The doc-id PFOR-vs-varint choice
+    is likewise run-level (codecs.encode_doc_streams): one histogram +
+    matmul width search for all blocks, batched bitpacking.
+
+    ``pos_b`` holds each posting's varint position stream (delta reset
+    at posting starts) back to back; posting i's bytes are
+    ``pos_b[pos_doc_off[i]:pos_doc_off[i + 1]]`` (offsets may point into
+    a larger buffer shared with other runs)."""
     from .codecs import encode_doc_streams, varint_encode_lens
 
-    pdf = pdf.sort_values("doc_id", kind="mergesort")
-    term = pdf["term"].iloc[0]
-    salt = int(pdf["salt"].iloc[0])
-    bucket = int(pdf["term_bucket"].iloc[0])
-    n = len(pdf)
-    doc_i64 = pdf["doc_id"].to_numpy(dtype=np.int64)
+    n = len(doc_i64)
     doc_u = doc_i64.view(np.uint64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64).astype(np.uint64)
-    dls = pdf["doc_len"].to_numpy(dtype=np.int64).astype(np.uint64)
-
     block_starts = np.arange(0, n, BLOCK_SIZE, dtype=np.int64)
     block_ends = np.minimum(block_starts + BLOCK_SIZE, n)
+    n_blocks = len(block_starts)
 
     deltas = np.empty_like(doc_u)
     deltas[0] = doc_u[0]
@@ -201,75 +213,172 @@ def _encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
     doc_b, doc_nb = varint_encode_lens(deltas)
     tf_b, tf_nb = varint_encode_lens(tfs)
     dl_b, dl_nb = varint_encode_lens(dls)
-
-    if "pos_enc" in pdf.columns:
-        # positions arrive pre-encoded per posting (stage-1 fast path);
-        # the delta stream resets at posting starts, so doc-order
-        # concatenation is bit-identical to whole-list encoding. One
-        # pa.array pass concatenates the blobs AND yields the offsets —
-        # the per-blob len() generator + b"".join pair was ~25% of the
-        # encode kernel at bench scale.
-        import pyarrow as pa
-
-        arr = pa.array(pdf["pos_enc"].to_numpy(), type=pa.binary())
-        off_buf, data_buf = arr.buffers()[1], arr.buffers()[2]
-        pos_doc_off = np.frombuffer(off_buf, dtype=np.int32)[: n + 1].astype(np.int64)
-        pos_b = data_buf.to_pybytes() if data_buf is not None else b""
-    else:
-        pos_arrays = pdf["positions"].to_numpy()
-        flat = (
-            np.concatenate([np.asarray(p, dtype=np.uint64) for p in pos_arrays])
-            if n
-            else np.array([], dtype=np.uint64)
-        )
-        tok_cum = np.concatenate([[0], np.cumsum(tfs)]).astype(np.int64)
-        if len(flat):
-            pdel = flat.copy()
-            pdel[1:] = flat[1:] - flat[:-1]
-            pdel[tok_cum[:-1]] = flat[tok_cum[:-1]]  # per-doc absolute base
-            pos_b, pos_nb = varint_encode_lens(pdel)
-        else:
-            pos_b, pos_nb = b"", np.zeros(0, dtype=np.int64)
-        pos_val_off = np.concatenate([[0], np.cumsum(pos_nb)]).astype(np.int64)
-        pos_doc_off = pos_val_off[tok_cum]  # byte offset at each doc boundary
-    pc_b, pc_nb = varint_encode_lens(tfs)  # pos counts stream == tf stream
-
     doc_off = np.concatenate([[0], np.cumsum(doc_nb)]).astype(np.int64)
     tf_off = np.concatenate([[0], np.cumsum(tf_nb)]).astype(np.int64)
     dl_off = np.concatenate([[0], np.cumsum(dl_nb)]).astype(np.int64)
-    pc_off = np.concatenate([[0], np.cumsum(pc_nb)]).astype(np.int64)
-
+    # the pos-counts stream equals the tf stream byte for byte
     doc_streams = encode_doc_streams(deltas, block_starts, block_ends, doc_b, doc_off)
 
-    max_tf = np.maximum.reduceat(tfs, block_starts).astype(np.int64)
-    min_dl = np.minimum.reduceat(dls, block_starts).astype(np.int64)
-    sum_tf = np.add.reduceat(tfs, block_starts).astype(np.int64)
+    def sliced(buf: bytes, off: np.ndarray) -> list[bytes]:
+        return [_TAG_VARINT + buf[off[s] : off[e]] for s, e in zip(block_starts, block_ends)]
 
-    rows = [
-        (
-            term,
-            salt,
-            k,
-            int(e - s),
-            int(sum_tf[k]),
-            int(doc_i64[s]),
-            int(doc_i64[e - 1]),
-            int(max_tf[k]),
-            int(min_dl[k]),
-            doc_streams[k],
-            _TAG_VARINT + tf_b[tf_off[s] : tf_off[e]],
-            _TAG_VARINT + dl_b[dl_off[s] : dl_off[e]],
-            _TAG_VARINT + pc_b[pc_off[s] : pc_off[e]],
-            _TAG_VARINT + pos_b[pos_doc_off[s] : pos_doc_off[e]],
-            bucket,
+    tf_streams = sliced(tf_b, tf_off)
+    pos_streams = sliced(pos_b, pos_doc_off)
+    # 5 streams: doc ids, tf, doc_len, pos counts (== tf), positions
+    bytes_enc = (
+        np.fromiter(map(len, doc_streams), dtype=np.int64, count=n_blocks)
+        + 4
+        + 2 * (tf_off[block_ends] - tf_off[block_starts])
+        + (dl_off[block_ends] - dl_off[block_starts])
+        + (pos_doc_off[block_ends] - pos_doc_off[block_starts])
+    )
+    return [
+        [term] * n_blocks,
+        np.full(n_blocks, salt, dtype=np.int32),
+        np.arange(n_blocks, dtype=np.int32),
+        (block_ends - block_starts).astype(np.int32),
+        np.add.reduceat(tfs, block_starts).astype(np.int64),
+        doc_i64[block_starts],
+        doc_i64[block_ends - 1],
+        np.maximum.reduceat(tfs, block_starts).astype(np.int32),
+        np.minimum.reduceat(dls, block_starts).astype(np.int32),
+        doc_streams,
+        tf_streams,
+        sliced(dl_b, dl_off),
+        tf_streams,
+        pos_streams,
+        np.full(n_blocks, bucket, dtype=np.int32),
+        bytes_enc,
+    ]
+
+
+def _varint_positions(positions) -> tuple[bytes, np.ndarray]:
+    """Unencoded ``positions`` lists (the live postings compact() feeds)
+    → the stage-1 ``pos_enc`` layout: each posting's positions as a
+    varint delta stream reset at the posting start, back to back, plus
+    the byte offset of every posting start (length n + 1)."""
+    from .codecs import varint_encode_lens
+
+    counts = np.asarray(positions.value_lengths(), dtype=np.int64)
+    flat = np.asarray(positions.flatten(), dtype=np.int64).astype(np.uint64)
+    tok_cum = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+    if not len(flat):
+        return b"", np.zeros(len(counts) + 1, dtype=np.int64)
+    pdel = flat.copy()
+    pdel[1:] = flat[1:] - flat[:-1]
+    firsts = tok_cum[:-1][counts > 0]
+    pdel[firsts] = flat[firsts]  # per-posting absolute base
+    pos_b, pos_nb = varint_encode_lens(pdel)
+    return pos_b, np.concatenate([[0], np.cumsum(pos_nb)]).astype(np.int64)[tok_cum]
+
+
+def _batch_positions(rb) -> tuple[bytes, np.ndarray]:
+    """(position bytes, per-posting byte offsets) of one Arrow batch,
+    read straight from the ``pos_enc`` binary column's buffers, or
+    encoded from a ``positions`` list column."""
+    import pyarrow as pa
+
+    if "pos_enc" not in rb.schema.names:
+        return _varint_positions(rb.column("positions"))
+    arr = rb.column("pos_enc")
+    off_type = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, dtype=off_type)[arr.offset : arr.offset + len(arr) + 1]
+    return (data_buf.to_pybytes() if data_buf is not None else b""), off.astype(np.int64)
+
+
+def _encode_sorted_batches(batches: Iterator) -> Iterator:
+    """mapInArrow kernel over one partition sorted by (term, salt,
+    doc_id): finds the (term, salt) run boundaries of each Arrow batch,
+    encodes every run with ``_encode_run`` on array slices, and yields
+    one SEGMENT_SCHEMA batch per input batch. The run still open at a
+    batch's end is carried into the next batch, so the output is the
+    same for any batch size.
+
+    Ordering is checked, never assumed: a (term, salt) key below the
+    previous run's (so a run that reappears within the partition), or
+    doc ids that do not strictly increase within a run, raise instead
+    of writing a corrupt block. Python's str order is Spark's binary
+    UTF-8 string order, so sorted input always passes."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(SEGMENT_SCHEMA)
+    open_key: tuple[str, int] | None = None
+    open_bucket = 0
+    pieces: list[tuple] = []  # slices of the open run, one per batch
+
+    def close() -> list:
+        if len(pieces) == 1:
+            doc, tf, dl, pos_b, pos_off = pieces[0]
+        else:
+            doc, tf, dl = (np.concatenate([p[i] for p in pieces]) for i in range(3))
+            pos_b = b"".join(p[3][p[4][0] : p[4][-1]] for p in pieces)
+            lens = np.concatenate([np.diff(p[4]) for p in pieces])
+            pos_off = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
+        bad = np.flatnonzero(doc[1:] <= doc[:-1])
+        if len(bad):
+            i = bad[0]
+            run = f"run (term={open_key[0]!r}, salt={open_key[1]})"
+            if doc[i + 1] == doc[i]:
+                raise ValueError(
+                    f"segment encode: duplicate doc_id {doc[i]} in {run} — "
+                    "document ids must be unique"
+                )
+            raise ValueError(
+                f"segment encode: doc ids of {run} decrease ({doc[i]} then "
+                f"{doc[i + 1]}) — the input partition must be sorted by "
+                "(term, salt, doc_id)"
+            )
+        pieces.clear()
+        return _encode_run(*open_key, open_bucket, doc, tf, dl, pos_b, pos_off)
+
+    def to_batch(runs: list[list]) -> pa.RecordBatch:
+        cols = [
+            list(chain.from_iterable(c)) if isinstance(c[0], list) else np.concatenate(c)
+            for c in zip(*runs)
+        ]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
         )
-        for k, (s, e) in enumerate(zip(block_starts, block_ends))
-    ]
-    rows = [
-        r + (sum(len(r[i]) for i in (9, 10, 11, 12, 13) if r[i] is not None),)
-        for r in rows
-    ]
-    return pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
+
+    for rb in batches:
+        n = rb.num_rows
+        if not n:
+            continue
+        terms = rb.column("term")
+        salts = rb.column("salt").to_numpy()
+        cut = salts[1:] != salts[:-1]
+        if n > 1:
+            cut |= pc.not_equal(terms.slice(1), terms.slice(0, n - 1)).to_numpy(
+                zero_copy_only=False
+            )
+        bounds = np.concatenate([[0], np.flatnonzero(cut) + 1, [n]])
+        doc = rb.column("doc_id").to_numpy()
+        tf = rb.column("tf").to_numpy().astype(np.uint64)
+        dl = rb.column("doc_len").to_numpy().astype(np.uint64)
+        buckets = rb.column("term_bucket").to_numpy()
+        pos_b, pos_off = _batch_positions(rb)
+
+        runs = []
+        for s, e in zip(bounds[:-1], bounds[1:]):
+            key = (terms[s].as_py(), int(salts[s]))
+            if key != open_key:
+                if pieces:
+                    runs.append(close())
+                if open_key is not None and key < open_key:
+                    raise ValueError(
+                        f"segment encode: run (term={key[0]!r}, salt={key[1]}) "
+                        f"follows (term={open_key[0]!r}, salt={open_key[1]}) — the "
+                        "input must be partitioned and sorted by (term, salt, doc_id)"
+                    )
+                open_key, open_bucket = key, int(buckets[s])
+            pieces.append((doc[s:e], tf[s:e], dl[s:e], pos_b, pos_off[s : e + 1]))
+        if runs:
+            yield to_batch(runs)
+    if pieces:
+        yield to_batch([close()])
 
 
 def _dict_agg(seg: DataFrame) -> DataFrame:
@@ -437,15 +546,20 @@ def encode_postings_df(
         )
         .drop("n_salts")
     )
-    # per-(term, salt) applyInPandas is deliberate: a whole-partition
-    # arrow kernel (fewer python calls, batched numpy) measured 2x
-    # FASTER solo but 3x slower under full-core concurrency — per-group
+    # one sorted pass per partition: the JVM<->Python boundary is paid
+    # once per Arrow batch, not once per (term, salt) group, which on a
+    # corpus of many small groups cost more than the encoding itself.
+    # The numpy passes stay per (term, salt) run, not
+    # per partition: a whole-partition batched-numpy encoder measured 2x
+    # faster solo but 3x slower under full-core concurrency — per-run
     # working sets stay cache-resident while partition-sized passes are
-    # memory-bandwidth-bound and contend across workers (r6 A/B:
-    # old 11-19 s vs batched 32-55 s at local[8] on the bench corpus)
+    # memory-bandwidth-bound and contend across workers (A/B in
+    # OPTIMIZATION_r06.md §2: per group 11-19 s vs batched 32-55 s at
+    # local[8] on the bench corpus)
     seg = (
-        salted.groupBy("term", "salt")
-        .applyInPandas(_encode_group, SEGMENT_SCHEMA)
+        salted.repartition("term", "salt")
+        .sortWithinPartitions("term", "salt", "doc_id")
+        .mapInArrow(_encode_sorted_batches, SEGMENT_SCHEMA)
         .withColumn("gen", F.lit(gen))
     )
     seg.write.mode("append" if append else "overwrite").partitionBy(
@@ -582,6 +696,25 @@ class _PinnedSegmentIndex(SegmentIndex):
         return SegmentIndex.at_generation(self, as_of)
 
 
+def count_unique_ids(docs: DataFrame, id_col: str) -> int:
+    """Row count of ``docs``, in one aggregation that also proves its ids
+    unique: every posting list holds one posting per (term, doc), so a
+    repeated id would reach the encoder as a repeated doc id in a run.
+    Raises ValueError naming a repeated id; callers run it before they
+    write anything."""
+    row = docs.agg(
+        F.count(F.lit(1)), F.count(id_col), F.countDistinct(id_col)
+    ).first()
+    n_rows, n_ids, n_distinct = row[0], row[1], row[2]
+    if n_distinct < n_ids:
+        dup = docs.groupBy(id_col).count().filter(F.col("count") > 1).first()[0]
+        raise ValueError(
+            f"duplicate doc_id {dup!r}: {n_ids - n_distinct} row(s) repeat an "
+            "earlier row's id; document ids must be unique"
+        )
+    return int(n_rows)
+
+
 def build_segments(
     docs: DataFrame,
     index_dir: str,
@@ -612,6 +745,7 @@ def build_segments(
     terms_path = fsio.join(index_dir, "terms")
 
     manifest_rows: list[tuple] = []
+    n_docs: int | None = None
 
     def _widened() -> DataFrame:
         # Small inputs bin-pack into fewer read splits than cores; widen so
@@ -620,39 +754,42 @@ def build_segments(
         target = spark.sparkContext.defaultParallelism
         return docs.repartition(target) if docs.rdd.getNumPartitions() < target else docs
 
-    if checkpoint_postings:
-        # ---- stage 1: postings (tokenize + per-doc aggregate, no shuffle) ----
-        if not (resume and _stage_done(index_dir, "postings_raw")):
-            t0 = time.time()
+    # the segments stage is the resume point that matters: once it has
+    # committed, neither stage 1 nor its postings are read again
+    if not (resume and _stage_done(index_dir, "segments")):
+        n_docs = count_unique_ids(docs, id_col)
+        if checkpoint_postings:
+            # ---- stage 1: postings (tokenize + per-doc aggregate, no shuffle) ----
+            if not (resume and _stage_done(index_dir, "postings_raw")):
+                t0 = time.time()
+                src = _widened()
+                postings = build_postings(
+                    src, id_col=id_col, text_col=text_col, mode=mode, encode_positions=True
+                )
+                postings = postings.withColumn(
+                    "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+                )
+                postings.write.mode("overwrite").parquet(raw_path)
+                wall = time.time() - t0
+                _write_marker(index_dir, "postings_raw", {"wall_sec": wall, "build_id": build_id})
+                manifest_rows.append(
+                    (build_id, "postings_raw", "all", "complete", 0, 0, 0, wall, time.time())
+                )
+
+            raw = spark.read.schema(RAW_READ_SCHEMA).parquet(raw_path)
+            hot = None
+        else:
             src = _widened()
-            postings = build_postings(
+            raw = build_postings(
                 src, id_col=id_col, text_col=text_col, mode=mode, encode_positions=True
-            )
-            postings = postings.withColumn(
+            ).withColumn(
                 "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
             )
-            postings.write.mode("overwrite").parquet(raw_path)
-            wall = time.time() - t0
-            _write_marker(index_dir, "postings_raw", {"wall_sec": wall, "build_id": build_id})
-            manifest_rows.append(
-                (build_id, "postings_raw", "all", "complete", 0, 0, 0, wall, time.time())
+            hot = sketch_hot_terms(
+                src, id_col, text_col, mode, hot_df_threshold, fraction=sketch_fraction
             )
 
-        raw = spark.read.schema(RAW_READ_SCHEMA).parquet(raw_path)
-        hot = None
-    else:
-        src = _widened()
-        raw = build_postings(
-            src, id_col=id_col, text_col=text_col, mode=mode, encode_positions=True
-        ).withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        )
-        hot = sketch_hot_terms(
-            src, id_col, text_col, mode, hot_df_threshold, fraction=sketch_fraction
-        )
-
-    # ---- stage 2: salted repartition-by-term → encoded segment blocks ----
-    if not (resume and _stage_done(index_dir, "segments")):
+        # ---- stage 2: salted repartition-by-term → encoded segment blocks ----
         t0 = time.time()
         encode_postings_df(raw, seg_path, hot_df_threshold, gen=0, append=False, hot=hot)
         wall = time.time() - t0
@@ -664,6 +801,9 @@ def build_segments(
         manifest_rows.append(
             (build_id, "segments", "all", "complete", 0, 0, 0, wall, time.time())
         )
+        # committed: the stage-1 checkpoint has done its job (its marker
+        # stays, and keeps the stage's wall for stats.json)
+        fsio.rmtree(raw_path)
 
     # ---- stage 3: distributed merge → final term dictionary; the tiny
     # dictionary then yields per-bucket lineage + build metrics without a
@@ -713,12 +853,13 @@ def build_segments(
     # ---- stage 4: corpus stats + build metrics (all from stage markers) ----
     stats_path = fsio.join(index_dir, "stats.json")
     if not (resume and _stage_done(index_dir, "stats")):
-        n_docs = docs.count()  # parquet sources: metadata-only count
+        if n_docs is None:
+            n_docs = docs.count()  # parquet sources: metadata-only count
         seg_m = _read_marker(index_dir, "segments") or {}
         term_m = _read_marker(index_dir, "terms") or {}
         raw_m = _read_marker(index_dir, "postings_raw") or {}
         total = int(term_m.get("total_tokens", 0))
-        build_wall = float(raw_m.get("wall_sec", 0.0)) + float(seg_m.get("wall_sec", 0.0))
+        build_wall = sum(float(m.get("wall_sec", 0.0)) for m in (raw_m, seg_m, term_m))
         n_post = int(term_m.get("n_postings", 0))
         payload = {
             "format": SEGMENT_FORMAT,
@@ -800,6 +941,7 @@ def upsert_segments(
     """Upsert a batch: mask old postings of the batch's ids, append a new
     segment generation, re-merge the dictionary (D1)."""
     spark = si.spark
+    n_batch = count_unique_ids(batch, id_col)  # before anything is written
     new_gen = si.max_gen() + 1
     ids = batch.select(F.col(id_col).cast("long").alias("doc_id")).distinct()
     ids.withColumn("del_gen", F.lit(new_gen)).write.mode("append").parquet(
@@ -817,7 +959,6 @@ def upsert_segments(
     merge_dictionary_incremental(
         spark, fsio.join(si.index_dir, "segments"), fsio.join(si.index_dir, "terms"), new_gen
     )
-    n_batch = batch.count()
     _write_stats_json(
         spark,
         si.index_dir,
@@ -885,6 +1026,8 @@ def compact(si: SegmentIndex, hot_df_threshold: int = 250_000) -> SegmentIndex:
     fsio.rmtree(fsio.join(si.index_dir, "deletes"))
     n_docs = raw.select("doc_id").distinct().count()
     total = raw.agg(F.sum("tf")).collect()[0][0] or 0
+    # the new segments are committed and counted: drop their input
+    fsio.rmtree(raw_path)
     # compaction rewrites history: generations collapse into the new
     # gen=0, so point-in-time readers older than the compact are gone
     # (exactly Lucene's background merge dropping old commit points)

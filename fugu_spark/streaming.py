@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .segments import SegmentIndex, upsert_segments
+from .segments import SegmentIndex, count_unique_ids, upsert_segments
 from .tokenizer import DEFAULT_MODE
 
 
@@ -62,6 +62,7 @@ def start_stream_ingest(
         from .dates import with_date_fields
 
         batch = with_date_fields(batch)
+        count_unique_ids(batch, id_col)  # a repeated id fails before any write
         si = SegmentIndex.load(spark, index_dir)
         if facets_col and facets_col in batch.columns:
             # counts ledger: subtract the facets this batch's ids currently

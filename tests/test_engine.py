@@ -252,3 +252,27 @@ def test_served_grouped_topk_matches_filtered_searches(engine):
         assert [(r.doc_id, r.score) for r in rows] == list(
             zip(single["doc_id"], single["score"])
         )
+
+
+def test_ingest_rejects_duplicate_doc_ids(spark, tmp_path):
+    """A batch that repeats an id fails before any sidecar or segment
+    write: the facet counts and the search results stay as they were."""
+    docs = spark.createDataFrame(
+        [(1, "alpha merge", ["/lang/py"]), (2, "beta join", ["/lang/go"])],
+        "doc_id long, text string, facets array<string>",
+    )
+    eng = FuguSparkEngine.build(docs, str(tmp_path / "idx"))
+    ledger = str(tmp_path / "idx" / "counts_index")
+    n_ledger = spark.read.parquet(ledger).count()
+    tree = eng.facet_tree()
+    hits = sorted((r.doc_id, r.score) for r in eng.search("merge", k=10).collect())
+    batch = spark.createDataFrame(
+        [(2, "merge one", ["/lang/rs"]), (2, "merge two", ["/lang/rs"])],
+        "doc_id long, text string, facets array<string>",
+    )
+    with pytest.raises(ValueError, match="duplicate doc_id 2"):
+        eng.ingest(batch)
+    assert eng.si.max_gen() == 0
+    assert spark.read.parquet(ledger).count() == n_ledger
+    assert eng.facet_tree() == tree
+    assert sorted((r.doc_id, r.score) for r in eng.search("merge", k=10).collect()) == hits

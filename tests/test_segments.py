@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from fugu_spark import codecs
@@ -365,3 +366,225 @@ def test_dict_merge_reads_metadata_only(spark, seg_index):
         )
     ).collect()[0][0]
     assert sdf.agg(F.sum("bytes_enc")).collect()[0][0] == recomputed
+
+
+# ---- stage-2 encode: batch-boundary and salt invariance ----------------
+
+def _ref_segment_rows(postings):
+    """Spark-free reference encoder: salt every posting the way the build
+    does, then encode each (term, salt) group ALONE, block by block, with
+    codecs.encode_posting_block. ``postings`` is a pandas frame with an
+    unencoded ``positions`` column and a ``salt`` column."""
+    rows = []
+    for (term, salt), g in postings.groupby(["term", "salt"], sort=False):
+        g = g.sort_values("doc_id")
+        doc = g["doc_id"].to_numpy(np.int64)
+        tf = g["tf"].to_numpy(np.uint64)
+        dl = g["doc_len"].to_numpy(np.uint64)
+        pos = list(g["positions"])
+        for k, s in enumerate(range(0, len(g), codecs.BLOCK_SIZE)):
+            e = min(s + codecs.BLOCK_SIZE, len(g))
+            flat = np.concatenate([np.asarray(p, dtype=np.uint64) for p in pos[s:e]])
+            enc = codecs.encode_posting_block(doc[s:e].view(np.uint64), tf[s:e], dl[s:e], flat, tf[s:e])
+            streams = tuple(
+                enc[c]
+                for c in ("doc_ids_enc", "tfs_enc", "doc_lens_enc", "pos_counts_enc", "positions_enc")
+            )
+            rows.append((
+                term, int(salt), k, e - s, int(tf[s:e].sum()), int(doc[s]), int(doc[e - 1]),
+                int(tf[s:e].max()), int(dl[s:e].min()), *streams,
+                int(g["term_bucket"].iloc[0]), sum(map(len, streams)),
+            ))
+    return sorted(rows)
+
+
+def _seg_rows(spark, path):
+    from fugu_spark.segments import SEGMENT_SCHEMA
+
+    cols = [f.name for f in SEGMENT_SCHEMA.fields]
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytearray, memoryview)) else v for v in r)
+        for r in spark.read.parquet(path).select(cols).collect()
+    )
+
+
+def test_encode_byte_identical_across_batches_and_salts(spark, tmp_path):
+    """The per-partition encode (runs found per Arrow batch, a run cut by
+    a batch boundary carried into the next batch) writes exactly the
+    blocks a per-group encoder writes — with 5-row Arrow batches, salted
+    hot terms of several blocks per salt, negative doc ids, multi-byte
+    position varints, and both position inputs (stage 1's pre-encoded
+    ``pos_enc`` and compact()'s unencoded ``positions``)."""
+    from fugu_spark.postings import build_postings
+    from fugu_spark.segments import encode_postings_df
+
+    H = 150
+    docs = spark.createDataFrame(
+        [
+            (
+                i * 7919 - 1_000_000,
+                ("pad " * 200 if i % 50 == 0 else "")
+                + f"alpha {'beta ' * (i % 3 + 1)}gamma{i % 7} delta{i} alpha",
+            )
+            for i in range(400)
+        ],
+        "doc_id long, content string",
+    )
+
+    def raw(encode_positions):
+        return build_postings(
+            docs, id_col="doc_id", text_col="content", encode_positions=encode_positions
+        ).withColumn("term_bucket", F.pmod(F.xxhash64("term"), F.lit(4)).cast("int"))
+
+    n_salts = F.ceil(F.count(F.lit(1)).over(Window.partitionBy("term")) / H).cast("int")
+    ref_input = (
+        raw(False)
+        .withColumn("n", n_salts)
+        .withColumn(
+            "salt",
+            F.when(F.col("n") > 1, F.pmod(F.xxhash64("doc_id"), F.col("n")).cast("int"))
+            .otherwise(F.lit(0)),
+        )
+        .toPandas()
+    )
+    expected = _ref_segment_rows(ref_input)
+    salts = {(r[0], r[1]) for r in expected}
+    assert len({s for t, s in salts if t == "alpha"}) >= 2  # 'alpha' (df 400) is salted
+    assert max(r[2] for r in expected) >= 1  # some salt holds more than one block
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        for name, enc in (("pos_enc", True), ("positions", False)):
+            path = str(tmp_path / name)
+            encode_postings_df(raw(enc), path, H, gen=0, append=False)
+            assert _seg_rows(spark, path) == expected, name
+    finally:
+        spark.conf.set(key, old)
+
+
+def _postings_batch(terms, salts, doc_ids):
+    import pyarrow as pa
+
+    n = len(terms)
+    return pa.RecordBatch.from_pydict({
+        "doc_id": pa.array(doc_ids, pa.int64()),
+        "term": pa.array(terms, pa.string()),
+        "tf": pa.array([1] * n, pa.int32()),
+        "pos_enc": pa.array([codecs.varint_encode(np.array([d % 5], np.uint64)) for d in doc_ids], pa.binary()),
+        "doc_len": pa.array([3] * n, pa.int32()),
+        "term_bucket": pa.array([0] * n, pa.int32()),
+        "salt": pa.array(salts, pa.int32()),
+    })
+
+
+def test_encode_kernel_batch_split_invariant():
+    """Spark-free: the same sorted partition split into different Arrow
+    batch sizes encodes to the same block rows."""
+    import pyarrow as pa
+
+    from fugu_spark.segments import _encode_sorted_batches
+
+    terms = ["a"] * 300 + ["b"] * 3 + ["b"] * 140 + ["c"]
+    salts = [0] * 300 + [0] * 3 + [1] * 140 + [0]
+    docs = list(range(-150, 150)) + [1, 5, 9] + list(range(0, 1400, 10)) + [7]
+    whole = _postings_batch(terms, salts, docs)
+
+    def encode(size):
+        parts = [whole.slice(i, size) for i in range(0, whole.num_rows, size)]
+        return pa.Table.from_batches(list(_encode_sorted_batches(iter(parts)))).to_pylist()
+
+    ref = encode(whole.num_rows)
+    assert [(r["term"], r["salt"], r["n_docs"]) for r in ref] == [
+        ("a", 0, 128), ("a", 0, 128), ("a", 0, 44), ("b", 0, 3), ("b", 1, 128), ("b", 1, 12), ("c", 0, 1),
+    ]
+    for size in (1, 5, 128, 301):
+        assert encode(size) == ref, size
+
+
+@pytest.mark.parametrize(
+    "batches",
+    [
+        # doc ids of a run go backwards
+        [(["a", "a"], [0, 0], [3, 1])],
+        # a duplicate posting split across a batch boundary
+        [(["a", "a"], [0, 0], [1, 2]), (["a", "a"], [0, 0], [2, 3])],
+        # run (a, 0) reappears after (b, 0) in the same partition
+        [(["a", "b"], [0, 0], [1, 2]), (["a"], [0], [5])],
+        # salts interleaved within a term
+        [(["a", "a", "a"], [0, 1, 0], [1, 2, 3])],
+    ],
+)
+def test_encode_kernel_rejects_unsorted_input(batches):
+    """Spark-free: the encode kernel relies on (term, salt, doc_id) order
+    and must raise on input that breaks it, never write a corrupt block."""
+    from fugu_spark.segments import _encode_sorted_batches
+
+    with pytest.raises(ValueError, match="segment encode"):
+        list(_encode_sorted_batches(iter([_postings_batch(*b) for b in batches])))
+
+
+def test_build_drops_postings_raw_after_segments_commit(spark, seg_index):
+    """Stage 1's checkpoint is deleted once the segments stage commits;
+    its marker (and wall) stays, and stats.json sums all three stage
+    walls."""
+    import json
+    import os
+
+    d = seg_index.index_dir
+    assert not os.path.exists(f"{d}/postings_raw")
+    with open(f"{d}/stats.json") as f:
+        stats = json.load(f)
+    walls = []
+    for st in ("postings_raw", "segments", "terms"):
+        with open(f"{d}/_stage_{st}.json") as f:
+            walls.append(json.load(f)["wall_sec"])
+    assert stats["build_wall_sec"] == pytest.approx(sum(walls))
+
+
+def test_encode_kernel_names_duplicate_doc_id():
+    """Spark-free: a doc id repeated within a run is reported as a
+    duplicate id, not as a sort-order fault."""
+    from fugu_spark.segments import _encode_sorted_batches
+
+    with pytest.raises(ValueError, match="duplicate doc_id 2 "):
+        list(_encode_sorted_batches(iter([_postings_batch(["a"] * 3, [0] * 3, [1, 2, 2])])))
+
+
+def test_build_rejects_duplicate_doc_ids(spark, tmp_path):
+    """A corpus that repeats an id fails before stage 1 with the id named,
+    and writes no segments."""
+    import os
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma"), (2, "delta only")], "doc_id long, content string"
+    )
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="duplicate doc_id 2"):
+        build_segments(docs, d, n_buckets=4)
+    assert not os.path.exists(f"{d}/postings_raw") and not os.path.exists(f"{d}/segments")
+
+
+def test_upsert_rejects_duplicate_doc_ids_unchanged(spark, docs_df, tmp_path):
+    """An upsert batch that repeats an id raises before the delete mask is
+    written: the index keeps its generation, mask and results."""
+    import os
+
+    from fugu_spark.segments import SegmentIndex, upsert_segments
+
+    d = str(tmp_path / "idx")
+    si = build_segments(docs_df, d, id_col="doc_id", text_col="content", n_buckets=4)
+    before = sorted((r.doc_id, r.score) for r in search_segments(si, "merge", k=50).collect())
+    ids = [r.doc_id for r in docs_df.select("doc_id").collect()]
+    batch = spark.createDataFrame(
+        [(ids[0], "merge rewritten"), (ids[0], "merge again"), (ids[1], "other merge")],
+        "doc_id long, content string",
+    )
+    with pytest.raises(ValueError, match=f"duplicate doc_id {ids[0]}"):
+        upsert_segments(si, batch, id_col="doc_id", text_col="content")
+    assert not os.path.exists(f"{d}/deletes")
+    si2 = SegmentIndex.load(spark, d)
+    assert si2.max_gen() == si.max_gen() == 0
+    after = sorted((r.doc_id, r.score) for r in search_segments(si2, "merge", k=50).collect())
+    assert after == before

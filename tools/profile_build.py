@@ -1,11 +1,17 @@
-"""Stage-level profiling of the segment build at a given local[N]."""
+"""Stage-level profiling of the segment build at a given local[N].
+
+    python tools/profile_build.py CPUS [ROWS]
+
+Work files go under the system temp directory (``TMPDIR``)."""
 
 import json
+import os
 import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fugu_spark.corpus import generate_corpus
 from fugu_spark.postings import build_postings
@@ -16,7 +22,7 @@ from pyspark.sql import functions as F
 
 def main(cpus: int, rows: int):
     spark = get_spark(app_name=f"profile_{cpus}", master=f"local[{cpus}]")
-    base = f"/tmp/fugu_profile_{cpus}"
+    base = os.path.join(tempfile.gettempdir(), f"fugu_profile_{cpus}")
     shutil.rmtree(base, ignore_errors=True)
     t = {}
     t0 = time.time()
